@@ -101,6 +101,23 @@ def _bucket_expr(
     return F.when(col.isNull(), null_bucket).otherwise(b)
 
 
+def _join_null_safe(
+    left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner"
+) -> DataFrame:
+    """Broadcast equi-join on ``keys`` in which NULL matches NULL — a
+    NULL partition value is a group of its own, as in a window's
+    PARTITION BY — with the column order of ``left.join(right, keys)``."""
+    renamed = right.select(
+        *[F.col(c).alias(f"_r{c}") if c in keys else F.col(c)
+          for c in right.columns]
+    )
+    cond = [F.col(k).eqNullSafe(F.col(f"_r{k}")) for k in keys]
+    out = left.join(F.broadcast(renamed), cond, how).drop(
+        *[f"_r{k}" for k in keys]
+    )
+    return out.select(*keys, *[c for c in out.columns if c not in keys])
+
+
 def bucket_boundaries(
     df: DataFrame, value_col: str, buckets: int
 ) -> list[float]:
@@ -185,7 +202,7 @@ def with_global_ranks(
     w_full = w_val.orderBy(
         *order, *[F.col(c).asc() for c in tiebreak_cols]
     )
-    out = dfb.join(F.broadcast(off_df), [*pcols, "_bkt"])
+    out = _join_null_safe(dfb, off_df, [*pcols, "_bkt"])
     if rn_col:
         out = out.withColumn(
             rn_col, F.col("_off") + F.row_number().over(w_full)
@@ -261,9 +278,9 @@ def select_at_ranks(
         g = tuple(row[c] for c in pcols)
         per_group.setdefault(g, []).append((row["_bkt"], totals.get(g, 0)))
         totals[g] = totals.get(g, 0) + row["_n"]
-    if not counts:
+    if not counts:  # empty input: falsy totals, as with_global_ranks
         out = dfb.drop("_bkt").withColumn("rn", F.lit(None).cast("int"))
-        return out.filter(F.lit(False)), (totals if pcols else {(): 0})
+        return out.filter(F.lit(False)), ({} if pcols else 0)
     spark = df.sparkSession
     # resolve each target rank to (bucket, local rank within bucket)
     probe_rows = []
@@ -287,8 +304,11 @@ def select_at_ranks(
         return out.filter(F.lit(False)), (
             totals if pcols else totals.get((), 0)
         )
+    # None-safe order: a NULL group key must not be compared with a value
     probe_df = values_df(
-        spark, sorted(set(probe_rows)), [*pcols, "_bkt", "_lrn", "rn"]
+        spark,
+        sorted(set(probe_rows), key=lambda t: [(v is None, v) for v in t]),
+        [*pcols, "_bkt", "_lrn", "rn"],
     )
     order = (
         [F.col(value_col).asc()] if ascending else [F.col(value_col).desc()]
@@ -297,12 +317,12 @@ def select_at_ranks(
         *order, *[F.col(c).asc() for c in tiebreak_cols]
     )
     hit_buckets = probe_df.select(*pcols, "_bkt").distinct()
-    selected = (
-        dfb.join(F.broadcast(hit_buckets), [*pcols, "_bkt"], "left_semi")
-        .withColumn("_lrn", F.row_number().over(w_full))
-        .join(F.broadcast(probe_df), [*pcols, "_bkt", "_lrn"])
-        .drop("_bkt", "_lrn")
-    )
+    selected = _join_null_safe(
+        _join_null_safe(
+            dfb, hit_buckets, [*pcols, "_bkt"], "left_semi"
+        ).withColumn("_lrn", F.row_number().over(w_full)),
+        probe_df, [*pcols, "_bkt", "_lrn"],
+    ).drop("_bkt", "_lrn")
     if not pcols:
         return selected, totals.get((), 0)
     return selected, dict(totals)

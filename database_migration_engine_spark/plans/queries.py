@@ -1317,7 +1317,7 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("multimodal_decode_stream")
 def multimodal_decode_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming multimodal ingestion (r07): the deterministic asset
-    table is staged once per session to a tmpfs parquet directory (4
+    table is staged once per session under the scratch root (4 parquet
     files), re-read as a FILE STREAM paced at maxFilesPerTrigger=2 (so
     the drain runs multiple real micro-batches), decoded with the SAME
     Arrow-batched mapInPandas feature extractor inside Structured
@@ -1327,44 +1327,17 @@ def multimodal_decode_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal_decode's: a drained stateless stream must equal the
     batch run row-for-row — certifying the 100 TB multimodal ingest
     shape (readStream → decode → sink) end to end."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time
-
+    from .. import scratch
     from ..operators import multimodal as MM
     from ..streaming import events as SE
 
     ensure_deterministic(spark)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    app = spark.sparkContext.applicationId
-    path = os.path.join(base, f"dbmig_assets_{app}")
-    stamp = os.path.join(path, "_dbmig_stamp")
-    if not os.path.exists(stamp):
-        # tmpfs is RAM: remove this session's staging dir at interpreter
-        # exit, and sweep siblings left by crashed sessions (stamp older
-        # than 6 h — a live session re-stages in seconds) (ADVICE r07).
-        for sib in os.listdir(base):
-            if not sib.startswith("dbmig_assets_") or sib == (
-                f"dbmig_assets_{app}"
-            ):
-                continue
-            old = os.path.join(base, sib, "_dbmig_stamp")
-            try:
-                if (
-                    os.path.exists(old)
-                    and time.time() - os.path.getmtime(old) > 6 * 3600
-                ):
-                    shutil.rmtree(os.path.join(base, sib), True)
-            except OSError:
-                pass
-        MM.synth_assets(spark, 200).repartition(4).write.mode(
+    path = scratch.build_once(
+        scratch.subdir(spark, "assets"),
+        lambda p: MM.synth_assets(spark, 200).repartition(4).write.mode(
             "overwrite"
-        ).parquet(path)
-        with open(stamp, "w") as fh:
-            fh.write("ok\n")
-        atexit.register(shutil.rmtree, path, True)
+        ).parquet(p),
+    )
     stream = (
         spark.readStream.schema(MM.ASSET_SCHEMA)
         .option("maxFilesPerTrigger", 2)
@@ -5941,9 +5914,7 @@ def events_copair_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import events as SE
 
     ensure_deterministic(spark)
-    staged = SE.heartbeat_stream_dir(
-        sf_dir, app_id=spark.sparkContext.applicationId
-    )
+    staged = SE.heartbeat_stream_dir(spark, sf_dir)
     # width 4: the r06 width sweep (w2 4.7-6.0, w3 3.8-3.9, w4 3.35-3.5,
     # w6 3.5, w8 3.6-4.0, w16 5.4 s quiet-box) moved the optimum down
     # from r05's w8 — per-partition store-commit overhead falls faster
@@ -6897,9 +6868,13 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = ev.join(F.broadcast(med), "event_type").withColumn(
         "dev", F.abs(F.col("value") - F.col("med"))
     )
-    med_rows = med.collect()  # ≤5 checkpointed rows — a ~ms action
-    med_mid = sorted(r["med"] for r in med_rows)[len(med_rows) // 2]
-    boundaries2 = sorted({abs(b - med_mid) for b in boundaries1})
+    # ≤5 checkpointed rows — a ~ms action; a group whose median row is
+    # NULL has no place in the dev-space boundary derivation
+    meds = sorted(r["med"] for r in med.collect() if r["med"] is not None)
+    boundaries2 = (
+        sorted({abs(b - meds[len(meds) // 2]) for b in boundaries1})
+        if meds else []
+    )
     sel2, _totals2 = RK.select_at_ranks(
         dev.select("event_id", "event_type", "dev"),
         "dev", ["event_id"], _median_targets,
@@ -7170,9 +7145,7 @@ def events_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import events as SE
 
     ensure_deterministic(spark)
-    staged = SE.late_stream_dir(
-        sf_dir, app_id=spark.sparkContext.applicationId
-    )
+    staged = SE.late_stream_dir(spark, sf_dir)
     # 5 micro-batches (the most of any drain here) × one state-store
     # commit per shuffle partition: pin the state width like every other
     # single-stateful drain (session.shuffle_width rationale)
@@ -7748,7 +7721,7 @@ def approx_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 def layout_composed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPOSED storage layout, driver-certified: lineitem is written
     ONCE as a table that is BOTH hive-partitioned by ship year AND
-    bucketed by order key (warehouse.ensure_partitioned_bucketed) —
+    bucketed by order key (warehouse.ensure_bucketed with partition_by) —
     the layout a real 100 TB fact table uses, where the two certified
     single-lever queries (partition_pruned_revenue, bucketed_join_revenue)
     compose in ONE physical plan: the 1997 ship-year filter resolves as
@@ -7772,9 +7745,9 @@ def layout_composed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("l_orderkey", "o_orderkey")
     )
     orders = read_table(spark, sf_dir, "orders")
-    t_l = WH.ensure_partitioned_bucketed(
-        spark, li, f"pb_lineitem_{sfx}", "l_shipyear", "o_orderkey",
-        num_buckets=8, sort_by="o_orderkey",
+    t_l = WH.ensure_bucketed(
+        spark, li, f"pb_lineitem_{sfx}", "o_orderkey",
+        num_buckets=8, sort_by="o_orderkey", partition_by="l_shipyear",
     )
     t_o = WH.ensure_bucketed(
         spark, orders, f"b_orders_{sfx}", "o_orderkey",

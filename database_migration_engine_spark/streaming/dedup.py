@@ -64,17 +64,15 @@ the path when per-batch scans must go below O(index).
 
 from __future__ import annotations
 
-import atexit
 import os
 import re
 import shutil
-import tempfile
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .. import scratch
 from ..operators.dedup import (
     _banded_signatures,
     _est_jaccard,
@@ -83,22 +81,6 @@ from ..operators.dedup import (
 
 NUM_HASHES, BANDS = 32, 8
 MIRROR_SHIFT = 1_000_000
-_ROOT_PREFIX = "dbmig_increm_dedup_"
-
-# one module-level atexit sweeper over the set of still-live work roots
-# (ADVICE r09: a per-invocation atexit.register grew the callback list
-# by one dead entry per drain in a long-lived session); roots are added
-# on entry and discarded after the finally's rmtree, so the sweeper only
-# touches roots a crashed drain actually leaked
-_LIVE_ROOTS: set[str] = set()
-
-
-def _sweep_live_roots() -> None:
-    for r in list(_LIVE_ROOTS):
-        shutil.rmtree(r, ignore_errors=True)
-
-
-atexit.register(_sweep_live_roots)
 
 
 def _bands_of(docs: DataFrame, spread: bool = True) -> DataFrame:
@@ -159,41 +141,12 @@ def _write_bucketed(
     writer.bucketBy(INDEX_BUCKETS, "band_id", "band_hash").saveAsTable(table)
 
 
-def _sweep_stale_roots(base: str, keep: str) -> None:
-    """tmpfs is RAM: remove work roots left by crashed sessions (mtime
-    older than 6 h — a live drain finishes in seconds), keeping this
-    session's own root (ADVICE r08: an exception mid-drain previously
-    leaked /dev/shm with no sweep, accumulating across crashes).
-    Deletion is additionally gated on owner liveness (ADVICE r10, the
-    warehouse-sweeper fix applied to its sibling): a root whose pidfile
-    names a live process is never swept, however old its mtime."""
-    from ..warehouse import owner_alive
-
-    try:
-        sibs = os.listdir(base)
-    except OSError:
-        return
-    for sib in sibs:
-        if not sib.startswith(_ROOT_PREFIX) or sib == keep:
-            continue
-        p = os.path.join(base, sib)
-        try:
-            if (
-                time.time() - os.path.getmtime(p) > 6 * 3600
-                and not owner_alive(p)
-            ):
-                shutil.rmtree(p, True)
-        except OSError:
-            pass
-
-
 def run_incremental_dedup_stream(
     spark: SparkSession,
     docs: DataFrame,
     new_min_id: int = 400,
     n_files: int = 6,
     files_per_trigger: int = 2,
-    work_dir: str | None = None,
 ) -> DataFrame:
     """Stage the new-arrival slice of ``docs`` as a paced file stream,
     drain it through the index-maintaining foreachBatch handler, and
@@ -207,27 +160,16 @@ def run_incremental_dedup_stream(
     ships zero new documents) returns an empty, correctly-typed frame
     — the pairs read uses an explicit schema, never inference over an
     empty sink (ADVICE r08)."""
-    base = work_dir or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    )
     app = spark.sparkContext.applicationId
-    root_name = f"{_ROOT_PREFIX}{app}_{new_min_id}"
-    root = os.path.join(base, root_name)
+    # the drain's work dir under the scratch root: removed in finally,
+    # and with the root at exit if an exception path skips the finally
+    root = scratch.subdir(spark, f"dedup_{new_min_id}")
     stage_dir = os.path.join(root, "stage")
     corpus_dir = os.path.join(root, "corpus_bands")
     arr_dir = os.path.join(root, "arrival_bands")
     pairs_dir = os.path.join(root, "pairs")
     ck_dir = os.path.join(root, "ck")
-    _sweep_stale_roots(base, root_name)
     shutil.rmtree(root, ignore_errors=True)
-    # backstop for exception paths that skip the finally below (e.g.
-    # KeyboardInterrupt through awaitTermination): the module-level
-    # sweeper rmtrees any root still in the live set at exit
-    _LIVE_ROOTS.add(root)
-    # liveness stamp for sibling sessions' sweepers (ADVICE r10)
-    from ..warehouse import write_owner_pidfile
-
-    write_owner_pidfile(root)
 
     docs = docs.select("doc_id", "text")
     new_docs = docs.filter(F.col("doc_id") >= new_min_id)
@@ -388,5 +330,4 @@ def run_incremental_dedup_stream(
             except Exception:
                 pass  # catalog teardown must never mask the real error
         shutil.rmtree(root, ignore_errors=True)
-        _LIVE_ROOTS.discard(root)
     return out

@@ -20,6 +20,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..schemas import EVENTS, EVENTS_RAW
 
 # State-operator metrics of the most recent run_to_memory drain
@@ -124,22 +125,22 @@ def run_to_memory(
     return the result table (drains all available input, then stops).
 
     The checkpoint (offset WAL + state-store deltas, committed once per
-    micro-batch per state partition) goes to tmpfs when available: a
-    memory-sink drain is non-durable BY DESIGN, so a RAM checkpoint
-    loses nothing while cutting the per-commit fsync tail (r04 verdict
-    item 4 — measured ~0.2-0.4 s per chained-stateful query at sf0.1).
-    Production writeStream sinks use durable checkpoint locations; this
-    helper is the drain-and-stop test/serving harness."""
-    import os
+    micro-batch per state partition) goes under the session's scratch
+    root, on tmpfs when available: a memory-sink drain is non-durable BY
+    DESIGN, so a RAM checkpoint loses nothing while cutting the
+    per-commit fsync tail (r04 verdict item 4 — measured ~0.2-0.4 s per
+    chained-stateful query at sf0.1). Production writeStream sinks use
+    durable checkpoint locations; this helper is the drain-and-stop
+    test/serving harness."""
     import shutil
-    import tempfile
 
     name = table_name or f"stream_result_{uuid.uuid4().hex[:8]}"
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     # uuid component independent of table_name: two concurrent drains
     # passing the same explicit name must never share (and finally-rmtree)
     # each other's live checkpoint (r05 advice item 3)
-    ck = os.path.join(base, f"dbmig_ck_{name}_{uuid.uuid4().hex[:8]}")
+    ck = scratch.subdir(
+        stream_df.sparkSession, "ck", f"{name}_{uuid.uuid4().hex[:8]}"
+    )
     try:
         query = (
             stream_df.writeStream.format("memory")
@@ -250,9 +251,10 @@ def interval_join_pairs(
 
 
 def heartbeat_stream_dir(
-    sf_dir: str, horizon: str = "2100-01-01", app_id: str | None = None
+    spark: SparkSession, sf_dir: str, horizon: str = "2100-01-01"
 ) -> str:
-    """Stage the events file plus a far-future HEARTBEAT row in a temp dir.
+    """Stage the events file plus a far-future HEARTBEAT row under the
+    session's scratch root.
 
     Stream-stream OUTER joins only emit their unmatched side when the
     watermark passes a row's expiry — and a file stream's watermark never
@@ -276,10 +278,9 @@ def heartbeat_stream_dir(
     # Spark sessions would have its mtimes re-touched by one session
     # while another's file source is mid-listing, which can collapse the
     # batch split and silently skip the outer-state flush
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    if app_id:
-        tag = f"{tag}-{app_id}"
-    out = os.path.join("/tmp", "dbmig_heartbeat_stream", tag)
+    out = scratch.subdir(
+        spark, "stream", os.path.basename(os.path.normpath(sf_dir))
+    )
     src = os.path.join(sf_dir, "events.parquet")
     dst = os.path.join(out, "events.parquet")
     stamp_path = os.path.join(out, ".src_stamp")
@@ -370,7 +371,7 @@ def _heartbeat_table(schema, day: str | None, ts_value=None):
     )
 
 
-def late_stream_dir(sf_dir: str, app_id: str | None = None) -> str:
+def late_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events fixture as a DETERMINISTIC out-of-order arrival:
     batch 0 = the even-user rows (full time range — establishes the
     watermark), batch 1 = a BRIDGE punctuation row at the even max event
@@ -399,10 +400,9 @@ def late_stream_dir(sf_dir: str, app_id: str | None = None) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) + "-late"
-    if app_id:
-        tag = f"{tag}-{app_id}"
-    out = os.path.join("/tmp", "dbmig_heartbeat_stream", tag)
+    out = scratch.subdir(
+        spark, "stream", os.path.basename(os.path.normpath(sf_dir)) + "-late"
+    )
     src = os.path.join(sf_dir, "events.parquet")
     f_ontime = os.path.join(out, "aa_ontime.parquet")
     f_bridge = os.path.join(out, "bb_bridge.parquet")
@@ -467,9 +467,7 @@ def attribution_join(
     it. The outer side needs watermark-driven state expiry to emit
     zero-click purchases — see heartbeat_stream_dir for how the flush is
     driven end-of-stream."""
-    staged = heartbeat_stream_dir(
-        sf_dir, app_id=spark.sparkContext.applicationId
-    )
+    staged = heartbeat_stream_dir(spark, sf_dir)
     # heartbeats MUST survive the per-side type filter: the filter is
     # pushed into the parquet scan, and a heartbeat dropped at the scan
     # never reaches the watermark node — leaving the watermark pinned at

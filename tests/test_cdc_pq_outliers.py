@@ -228,9 +228,7 @@ class TestAttributionStream:
         from database_migration_engine_spark.session import shuffle_width
         from database_migration_engine_spark.streaming import events as SE
 
-        staged = SE.heartbeat_stream_dir(
-            SF_DIR, app_id=spark.sparkContext.applicationId
-        )
+        staged = SE.heartbeat_stream_dir(spark, SF_DIR)
         import os
 
         files = sorted(os.listdir(staged))
@@ -281,7 +279,7 @@ class TestAttributionStream:
             }
         )
         pq.write_table(tbl, str(d / "events.parquet"))
-        staged = SE.heartbeat_stream_dir(str(d), app_id="ncitest")
+        staged = SE.heartbeat_stream_dir(spark, str(d))
         hb = pq.read_table(os.path.join(staged, "zz_heartbeat_1.parquet"))
         assert hb.schema.field("ts").type == pa.int64()
         ns = hb.column("ts")[0].as_py()

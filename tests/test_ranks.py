@@ -153,3 +153,49 @@ def test_values_df_rejects_unrenderable_literals(spark):
         RK.values_df(spark, [(datetime.date(2024, 1, 1),)], ["d"])
     with pytest.raises(TypeError):
         RK.values_df(spark, [(float("inf"),)], ["f"])
+
+
+def _median(totals):
+    return {g: [(n + 1) // 2] for g, n in totals.items()}
+
+
+def test_select_at_ranks_empty_input_returns_falsy_totals(spark):
+    """ADVICE r11: the empty branch returned the truthy ``{(): 0}``,
+    defeating callers' ``if not totals`` empty-input guard."""
+    df = spark.createDataFrame([], "val double, tie long, g string")
+    sel, total = RK.select_at_ranks(df, "val", ["tie"], _median)
+    assert total == 0
+    assert sel.count() == 0
+    sel, totals = RK.select_at_ranks(
+        df, "val", ["tie"], _median, partition_cols=["g"]
+    )
+    assert totals == {}
+    assert sel.count() == 0
+
+
+def test_null_partition_key_is_its_own_group(spark):
+    """ADVICE r11: a NULL group key crashed the driver-side probe sort
+    with a None-vs-str TypeError; it must rank as a group of its own,
+    like a window's PARTITION BY."""
+    rows = [
+        ("a", 3.0, 0), ("a", 1.0, 1), (None, 5.0, 2), (None, 2.0, 3),
+        (None, 9.0, 4), ("b", 7.0, 5),
+    ]
+    df = spark.createDataFrame(rows, "g string, val double, tie long")
+    w = Window.partitionBy("g").orderBy("val", "tie")
+    want = {
+        (r.g, r.tie): r.rn
+        for r in df.withColumn("rn", F.row_number().over(w)).collect()
+    }
+    ranked, totals = RK.with_global_ranks(
+        df, "val", ["tie"], buckets=2, partition_cols=["g"], rn_col="rn"
+    )
+    assert totals == {("a",): 2, (None,): 3, ("b",): 1}
+    assert {(r.g, r.tie): r.rn for r in ranked.collect()} == want
+    sel, totals = RK.select_at_ranks(
+        df, "val", ["tie"], _median, buckets=2, partition_cols=["g"]
+    )
+    assert totals == {("a",): 2, (None,): 3, ("b",): 1}
+    assert {(r.g, r.rn, r.val) for r in sel.collect()} == {
+        ("a", 1, 1.0), (None, 2, 5.0), ("b", 1, 7.0)
+    }

@@ -53,15 +53,13 @@ def test_key_histogram(spark):
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, tmp_path_factory):
-    # the session's warehouse dir is fixed at startup; bucketed tables land
-    # there under unique names
+def bucketed_tables(spark):
     orders = read_table(spark, SF_DIR, "orders")
     li = read_table(spark, SF_DIR, "lineitem").withColumnRenamed(
         "l_orderkey", "o_orderkey"
     )
-    WH.write_bucketed(orders, "b_orders", "o_orderkey", num_buckets=8)
-    WH.write_bucketed(li, "b_lineitem", "o_orderkey", num_buckets=8)
+    WH.ensure_bucketed(spark, orders, "b_orders", "o_orderkey", num_buckets=8)
+    WH.ensure_bucketed(spark, li, "b_lineitem", "o_orderkey", num_buckets=8)
     yield "b_orders", "b_lineitem"
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
@@ -69,14 +67,14 @@ def bucketed_tables(spark, tmp_path_factory):
 
 def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     left, right = bucketed_tables
-    assert WH.bucketed_join_ready(spark, left, right)
+    assert spark.catalog.tableExists(left) and spark.catalog.tableExists(right)
     # disable broadcast so the planner must consider bucket co-location
     # (at fixture scale it would otherwise just broadcast the small side —
     # at 100 TB neither fact side is broadcastable)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = WH.shuffle_free_join(spark, left, right, "o_orderkey")
+        joined = spark.table(left).join(spark.table(right), "o_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
