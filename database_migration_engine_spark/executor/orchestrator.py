@@ -4,11 +4,13 @@ Migrations apply strictly in version order with fail-fast semantics
 (reference internal/executor/executor.go:120-138) — this loop is
 *deliberately* sequential on the driver: ordering is the product contract,
 so only the data movement inside one migration is distributed. The ledger
-is a parquet table updated with MERGE semantics (anti-join + union) and an
-atomic directory swap; mutual exclusion is a single-writer contract — the
-reference's pg advisory lock (internal/database/advisory_lock.go:12-65)
-has no Spark equivalent, so concurrent drivers must be fenced externally
-(SURVEY.md §7.4).
+is a parquet directory held on the driver: skip, tamper and rollback
+checks read one pyarrow snapshot keyed by the directory listing, and each
+upsert writes the whole row set as one Arrow table and swaps it in
+atomically, so applying or rolling back a migration starts no Spark job.
+Concurrent writers are excluded by an advisory file lock plus a fencing
+token checked at every swap (the reference uses a pg advisory lock,
+internal/database/advisory_lock.go:12-65).
 
 SQL execution is pluggable via ``SQLRunner``: ``CollectingRunner`` for
 tests/dry runs, ``JdbcRunner`` for a live database via the JVM's
@@ -21,6 +23,7 @@ inside one with lock_timeout/statement_timeout set
 from __future__ import annotations
 
 import fcntl
+import functools
 import os
 import shutil
 import tempfile
@@ -29,6 +32,7 @@ import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -255,12 +259,32 @@ class PsqlRunner(SQLRunner):
 # --- parquet ledger ---------------------------------------------------------
 
 
-class ParquetLedger:
-    """schema_migrations as a parquet table with MERGE-style upserts.
+@functools.cache
+def _arrow_schema():
+    """SCHEMA_MIGRATIONS as Arrow: ``applied_at`` is timestamp[us, UTC],
+    which Spark reads back as TimestampType."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    Writes go to a fresh directory then atomically swap into place —
-    the plain-parquet stand-in for the reference's INSERT … ON CONFLICT
-    atomicity (internal/tracker/tracker.go:96-113).
+    return to_arrow_schema(schemas.SCHEMA_MIGRATIONS)
+
+
+class ParquetLedger:
+    """schema_migrations as a parquet directory, read and written on the
+    driver.
+
+    The ledger is a control-plane table — one row per migration file, so
+    bounded by the migration count. Every point read (``is_applied``,
+    ``get_checksum``, the rollback target lists) comes from one snapshot
+    ``{version: row}`` read with pyarrow and keyed by the directory's
+    file listing. Each write builds the new row set from that snapshot,
+    writes it as one Arrow table under a fresh UUID file name to a
+    sibling directory and atomically swaps it into place — the
+    plain-parquet stand-in for the reference's INSERT … ON CONFLICT
+    atomicity (internal/tracker/tracker.go:96-113). Since every swap, by
+    any writer, changes the listing, a read costs one ``os.listdir`` and
+    still sees the on-disk state. Only ``merge_batch`` (collecting its
+    micro-batch), ``df()`` and ``applied()`` run Spark; the last two stay
+    Spark reads for DataFrame consumers.
 
     Cross-process mutual exclusion uses a FENCING TOKEN (r02, closing the
     E12 gap vs the reference's pg advisory lock,
@@ -277,6 +301,8 @@ class ParquetLedger:
         self.spark = spark
         self.path = path
         self._held_token: str | None = None
+        self._snapshot_key: list[str] | None = None
+        self._snapshot: dict[str, dict] = {}
 
     # --- fencing token ------------------------------------------------------
 
@@ -354,8 +380,7 @@ class ParquetLedger:
     def ensure(self) -> None:
         """CREATE TABLE IF NOT EXISTS (reference internal/tracker/tracker.go:42-49)."""
         if not os.path.exists(self.path):
-            empty = self.spark.createDataFrame([], schema=schemas.SCHEMA_MIGRATIONS)
-            self._swap_in(empty)
+            self._write({})
 
     def df(self) -> DataFrame:
         return self.spark.read.schema(schemas.SCHEMA_MIGRATIONS).parquet(self.path)
@@ -366,94 +391,130 @@ class ParquetLedger:
             self.df().filter(F.col("status") == "applied").orderBy("version")
         )
 
+    def applied_versions(self) -> list[str]:
+        """The versions of ``applied()``, in the same order, from the
+        snapshot."""
+        return sorted(
+            v for v, row in self._rows().items() if row["status"] == "applied"
+        )
+
     def is_applied(self, version: str) -> bool:
         """L1 point-exists probe (reference internal/tracker/tracker.go:52-64)."""
-        return (
-            self.df()
-            .filter(
-                (F.col("version") == version) & (F.col("status") == "applied")
-            )
-            .limit(1)
-            .count()
-            > 0
-        )
+        row = self._rows().get(version)
+        return row is not None and row["status"] == "applied"
 
     def get_checksum(self, version: str) -> str:
         """L5 point lookup; missing version raises
         (reference internal/tracker/tracker.go:133-149)."""
-        row = (
-            self.df().filter(F.col("version") == version).select("checksum").first()
-        )
+        row = self._rows().get(version)
         if row is None:
             raise TargetNotFoundError(f"migration {version} not in ledger")
-        return row.checksum
+        return row["checksum"]
 
     def record_applied(
         self, version: str, filename: str, checksum: str, duration_ms: int
     ) -> None:
-        """L3 upsert (reference internal/tracker/tracker.go:96-113). The
-        one-row side is a JVM VALUES relation (not createDataFrame — a
-        Python-RDD plan costs seconds per evaluation)."""
-
-        def q(s: str) -> str:
-            return "'" + s.replace("'", "''") + "'"
-
-        new = self.spark.sql(
-            f"SELECT {q(version)} AS version, {q(filename)} AS filename,"
-            f" {q(checksum)} AS checksum,"
-            f" current_timestamp() AS applied_at,"
-            f" CAST({int(duration_ms)} AS INT) AS duration_ms,"
-            f" 'applied' AS status"
-        )
-        merged = self.df().join(new, "version", "left_anti").unionByName(new)
-        self._swap_in(merged)
+        """L3 upsert (reference internal/tracker/tracker.go:96-113)."""
+        rows = dict(self._rows())
+        rows.pop(version, None)
+        rows[version] = {
+            "version": version,
+            "filename": filename,
+            "checksum": checksum,
+            "applied_at": datetime.now(timezone.utc),
+            "duration_ms": int(duration_ms),
+            "status": "applied",
+        }
+        self._write(rows)
 
     def merge_batch(self, new_rows: DataFrame) -> None:
         """Multi-row MERGE keyed on version — the batch is authoritative
         for every version it carries (same new-wins semantics as the
         reference's ON CONFLICT DO UPDATE, tracker.go:96-113). Used by
         the streaming foreachBatch sink; rows must match
-        SCHEMA_MIGRATIONS."""
-        merged = (
-            self.df()
-            .join(new_rows, "version", "left_anti")
-            .unionByName(new_rows.select(*self.df().columns))
-        )
-        self._swap_in(merged)
+        SCHEMA_MIGRATIONS. The batch comes to the driver as Arrow, so its
+        instants stay UTC."""
+        batch = new_rows.select(*_arrow_schema().names).toArrow()
+        rows = dict(self._rows())
+        for row in batch.cast(_arrow_schema()).to_pylist():
+            rows.pop(row["version"], None)
+            rows[row["version"]] = row
+        self._write(rows)
 
     def record_rolled_back(self, version: str) -> None:
         """L4 conditional update + affected-rows check
         (reference internal/tracker/tracker.go:116-130)."""
-        current = self.df()
-        if current.filter(F.col("version") == version).count() == 0:
+        rows = dict(self._rows())
+        if version not in rows:
             raise TargetNotFoundError(f"migration {version} not in ledger")
-        self._swap_in(
-            current.withColumn(
-                "status",
-                F.when(F.col("version") == version, F.lit("rolled_back"))
-                .otherwise(F.col("status")),
-            )
-        )
+        rows[version] = {**rows[version], "status": "rolled_back"}
+        self._write(rows)
 
-    def _swap_in(self, df: DataFrame) -> None:
+    def _rows(self) -> dict[str, dict]:
+        """The snapshot ``{version: row}``, re-read whenever the ledger
+        directory's listing differs from the one it was read under."""
+        key = sorted(os.listdir(self.path))
+        while key != self._snapshot_key:
+            try:
+                self._snapshot = self._read(key)
+            except FileNotFoundError:
+                # a swap between the listing and the read: list again
+                fresh = sorted(os.listdir(self.path))
+                if fresh == key:
+                    raise
+                key = fresh
+                continue
+            self._snapshot_key = key
+        return self._snapshot
+
+    def _read(self, names: list[str]) -> dict[str, dict]:
+        import pyarrow.parquet as pq
+
+        schema = _arrow_schema()
+        rows: dict[str, dict] = {}
+        for name in names:
+            if name.startswith(("_", ".")):
+                continue  # _SUCCESS, .crc: Spark's hidden-file rule
+            # a ledger Spark wrote stores applied_at as INT96 (naive, UTC)
+            table = pq.read_table(
+                os.path.join(self.path, name),
+                columns=schema.names,
+                coerce_int96_timestamp_unit="us",
+            )
+            for row in table.cast(schema).to_pylist():
+                rows[row["version"]] = row
+        return rows
+
+    def _write(self, rows: dict[str, dict]) -> None:
+        """Swap ``rows`` in as the whole ledger."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
-        tmp = os.path.join(
-            tempfile.mkdtemp(dir=parent), f"ledger-{uuid.uuid4().hex}"
-        )
-        # write the replacement BEFORE entering the critical section so
-        # the serialized region is only check-fence → rename → rotate
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = self.path + f".old-{uuid.uuid4().hex}"
-        with self._fence_critical_section():
-            self._check_fence()
-            if os.path.exists(self.path):
-                os.rename(self.path, old)
-            os.rename(tmp, self.path)
-            if self._held_token is not None:
-                self._held_token = self._rotate_token()
-        if os.path.exists(old):
+        stage = tempfile.mkdtemp(dir=parent)
+        try:
+            tmp = os.path.join(stage, f"ledger-{uuid.uuid4().hex}")
+            os.mkdir(tmp)
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            # write the replacement BEFORE entering the critical section
+            # so the serialized region is only check-fence → rename → rotate
+            pq.write_table(
+                pa.Table.from_pylist(list(rows.values()), schema=_arrow_schema()),
+                os.path.join(tmp, name),
+                store_schema=False,  # the parquet logical types suffice
+            )
+            old = self.path + f".old-{uuid.uuid4().hex}"
+            with self._fence_critical_section():
+                self._check_fence()
+                if os.path.exists(self.path):
+                    os.rename(self.path, old)
+                os.rename(tmp, self.path)
+                if self._held_token is not None:
+                    self._held_token = self._rotate_token()
+            self._snapshot_key, self._snapshot = [name], rows
             shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(tmp), ignore_errors=True)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
 
 # --- the orchestrator -------------------------------------------------------
@@ -582,13 +643,7 @@ class Executor:
         with AdvisoryFileLock(self.ledger.path):  # withRollbackLock (E12)
             self.ledger.acquire_fence()
             self.ledger.ensure()
-            targets = [
-                r.version
-                for r in self.ledger.applied()
-                .orderBy(F.desc("version"))
-                .limit(steps)
-                .collect()
-            ]
+            targets = self.ledger.applied_versions()[::-1][:steps]
             if not targets:
                 raise NothingToRollbackError("no applied migrations")
             self._rollback_targets(migrations, targets)
@@ -603,12 +658,10 @@ class Executor:
         with AdvisoryFileLock(self.ledger.path):  # withRollbackLock (E12)
             self.ledger.acquire_fence()
             self.ledger.ensure()
-            applied = [r.version for r in self.ledger.applied().collect()]
+            applied = self.ledger.applied_versions()
             if target not in applied:
                 raise TargetNotFoundError(f"version {target} is not applied")
-            targets = sorted(
-                (v for v in applied if v > target), reverse=True
-            )
+            targets = [v for v in reversed(applied) if v > target]
             if not targets:
                 raise NothingToRollbackError(f"nothing applied after {target}")
             self._rollback_targets(migrations, targets)

@@ -80,20 +80,6 @@ def stopword_hits(tokens_col: str, lang: str) -> Column:
     )
 
 
-def predicted_lang(tokens_col: str) -> Column:
-    """Stopword-voting language ID with deterministic priority tie-break;
-    'unknown' when no stopword of any language appears."""
-    hits = {lang: stopword_hits(tokens_col, lang) for lang in LANG_PRIORITY}
-    best = F.greatest(*hits.values())
-    expr = F.lit("unknown")
-    # fold right-to-left so earlier languages win ties
-    for lang in reversed(LANG_PRIORITY):
-        expr = F.when((best > 0) & (hits[lang] == best), F.lit(lang)).otherwise(
-            expr
-        )
-    return expr
-
-
 def punct_count(text_col: str = "text") -> Column:
     return F.length(
         F.regexp_replace(F.col(text_col), f"[^{PUNCT_CLASS[1:-1]}]", "")

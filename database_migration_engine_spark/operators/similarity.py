@@ -33,6 +33,9 @@ from .joins import corpus_join
 # cosine_pairs_arrow collects its query side to the driver; refuse
 # anything larger than a bounded re-rank/QA batch (see its docstring)
 MAX_COLLECTED_QUERIES = 100_000
+# pq_assign collects its codebook to the driver and holds an
+# (n, codewords) distance block per batch; 8-bit PQ is the widest in use
+MAX_PQ_CODEWORDS = 256
 
 
 def _prepared(
@@ -693,38 +696,6 @@ def lsh_near_dup_pairs_sharded(
     )
 
 
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = 64,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: all (a < b) pairs whose
-    cosine similarity exceeds `threshold`.
-
-    This is the exact O(N²) verify step; at 100 TB candidate generation
-    must come from `ann_lsh_topk`'s bucketing first (same cosine
-    expression, sub-quadratic pair count) — this operator is then applied
-    only within buckets.
-    """
-    a = _prepared(df, id_col, vec_col, "q", dim)
-    b = _prepared(df, id_col, vec_col, "n", dim)
-    dot_expr = (
-        dot_unrolled("qvec", "nvec", dim) if dim else dot("qvec", "nvec")
-    )
-    return (
-        a.join(b, F.col("qid") < F.col("nid"))
-        .withColumn("cos_sim", dot_expr / (F.col("qnorm") * F.col("nnorm")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select(
-            F.col("qid").alias("id_a"),
-            F.col("nid").alias("id_b"),
-            "cos_sim",
-        )
-    )
-
-
 def assign_ivf_cells(
     df: DataFrame,
     centroids,  # numpy array (C, dim) float64
@@ -1048,9 +1019,10 @@ def pq_assign(
     through an exchange+sort whose only job was an argmin (measured as
     the 0.67 s single-task job of similarity_ivfpq's collect, plus a
     large share of its ~3 s of driver-side plan analysis). Now ONE
-    Arrow ``mapInPandas`` pass over the corpus: the ≤16·m-row codebook
-    is collected driver-side (the IVF-centroid bounded-collect
-    precedent) and rides into the closure; per subspace the squared-L2
+    Arrow ``mapInPandas`` pass over the corpus: the codebook (16 rows
+    for 4-bit codes; more than ``MAX_PQ_CODEWORDS`` is refused) is
+    collected driver-side (the IVF-centroid bounded-collect precedent)
+    and rides into the closure; per subspace the squared-L2
     accumulates dimension-by-dimension in the SAME left-associated
     order as the old column chain (float32 inputs widened to float64
     first, exactly like the per-element CAST AS DOUBLE), and the argmin
@@ -1065,7 +1037,15 @@ def pq_assign(
 
     ensure_worker_imports(corpus.sparkSession)
     sub = dim // m
-    cb_rows = codebook.select(id_col, vec_col).collect()
+    cb_rows = codebook.select(id_col, vec_col).limit(
+        MAX_PQ_CODEWORDS + 1
+    ).collect()
+    if len(cb_rows) > MAX_PQ_CODEWORDS:
+        raise ValueError(
+            f"pq_assign: codebook exceeds {MAX_PQ_CODEWORDS} codewords; it "
+            "is collected to the driver and shipped into the kernel "
+            "closure, so it must be a PQ codebook, not a corpus"
+        )
     cb_rows.sort(key=lambda r: r[0])
     j_ids = np.array([r[0] for r in cb_rows], dtype=np.int64)
     cmat = np.array(
@@ -1073,11 +1053,12 @@ def pq_assign(
         dtype=np.float64,
     )
 
+    # the id columns keep their input types, as the old join plan did
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField(id_col, corpus.schema[id_col].dataType),
             T.StructField("s", T.IntegerType()),
-            T.StructField("j", T.LongType()),
+            T.StructField("j", codebook.schema[id_col].dataType),
             T.StructField("dist", T.DoubleType()),
         ]
     )
@@ -1362,13 +1343,15 @@ def mmr_rerank(
     # driver-side greedy collects n_queries×pool candidate rows and up
     # to n_queries×pool² similarity rows. ``queries`` must therefore be
     # a bounded re-rank batch — the same contract as
-    # cosine_pairs_arrow's query side. A corpus-sized ``queries`` frame
-    # fails fast here instead of silently OOMing the driver.
-    cand_rows = cand.collect()
-    if len(cand_rows) * pool > MAX_COLLECTED_QUERIES:
+    # cosine_pairs_arrow's query side. The candidate collect itself is
+    # limited to one row past the bound, so a corpus-sized ``queries``
+    # frame fails fast here instead of OOMing the driver.
+    max_cand = MAX_COLLECTED_QUERIES // pool
+    cand_rows = cand.limit(max_cand + 1).collect()
+    if len(cand_rows) > max_cand:
         raise ValueError(
-            f"mmr_rerank: collected pool of {len(cand_rows)} candidate "
-            f"rows × pool={pool} exceeds the driver-side greedy bound "
+            f"mmr_rerank: more than {max_cand} candidate rows × "
+            f"pool={pool} exceeds the driver-side greedy bound "
             f"({MAX_COLLECTED_QUERIES}); mmr_rerank's queries side must "
             "be a bounded re-rank batch, not a corpus — pre-chunk the "
             "queries and union the results"

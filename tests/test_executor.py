@@ -409,3 +409,118 @@ def test_executor_apply_acquires_fence(spark, tmp_path, runner):
     executor.runner = RotatingRunner()
     with pytest.raises(LedgerFencedError):
         executor.apply(_safe_migrations(spark))
+
+
+# --- driver-resident snapshot ----------------------------------------------
+
+
+def test_ledger_reads_spark_written_int96_ledger(spark, tmp_path):
+    """A ledger Spark wrote (INT96 applied_at) reads back through the
+    snapshot with the same instants; an upsert keeps them, and Spark
+    still reads every row of the rewritten directory."""
+    import os
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ledger")
+    fixtures.ledger_df(spark).write.parquet(path)
+    part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
+    applied_at = pq.ParquetFile(os.path.join(path, part)).schema.column(3)
+    assert applied_at.physical_type == "INT96"
+
+    def spark_micros():
+        return {
+            r.version: r.us
+            for r in ParquetLedger(spark, path)
+            .df()
+            .select("version", F.unix_micros("applied_at").alias("us"))
+            .collect()
+        }
+
+    want = spark_micros()
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+    def micros(ts):
+        return (ts - epoch) // timedelta(microseconds=1)
+
+    led = ParquetLedger(spark, path)
+    got = {v: micros(r["applied_at"]) for v, r in led._rows().items()}
+    assert got == want
+
+    led.record_applied("999", "V999_new.up.sql", "9" * 64, 7)
+    after = spark_micros()
+    assert set(after) == set(want) | {"999"}
+    assert {v: after[v] for v in want} == want
+    now_us = micros(datetime.now(timezone.utc))
+    assert now_us - 60_000_000 < after["999"] <= now_us
+
+
+@pytest.mark.parametrize("fenced", [False, True])
+def test_ledger_sees_other_writers_swaps(spark, tmp_path, fenced):
+    """Two ledgers on one path: every swap B makes is visible to A's next
+    point read, whether or not either writer holds the fence."""
+    from database_migration_engine_spark.executor.orchestrator import (
+        LedgerFencedError,
+    )
+
+    path = str(tmp_path / "ledger")
+    a = ParquetLedger(spark, path)
+    b = ParquetLedger(spark, path)
+    if fenced:
+        a.acquire_fence()
+        b.acquire_fence()
+    a.ensure()
+    assert not a.is_applied("001")
+    if fenced:
+        b.acquire_fence()  # re-observe after A's ensure rotated the token
+
+    b.record_applied("001", "V001_a.up.sql", "a" * 64, 1)
+    assert a.is_applied("001")
+    assert a.get_checksum("001") == "a" * 64
+
+    b.record_applied("001", "V001_a.up.sql", "b" * 64, 1)
+    assert a.get_checksum("001") == "b" * 64
+
+    b.record_rolled_back("001")
+    assert not a.is_applied("001")
+    assert a.get_checksum("001") == "b" * 64
+    if fenced:
+        with pytest.raises(LedgerFencedError):
+            a.record_applied("002", "V002_a.up.sql", "c" * 64, 1)
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """The Spark job ids ``fn()`` started, read from the status tracker
+    under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ledger-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    # the tracker is fed by the listener bus; drain it before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ledger_calls_start_no_spark_job(spark, executor, runner):
+    """Apply on a fresh ledger, the skip checks of a re-apply and a
+    rollback start no Spark job beyond the migration set's collect."""
+    migs = fixtures.migrations_df(spark).filter(
+        F.col("version").isin("001", "003", "011")
+    )
+    baseline = len(_job_ids(spark, lambda: Executor.from_df(migs)))
+    assert baseline > 0  # the probe does see jobs
+
+    assert len(_job_ids(spark, lambda: executor.apply(migs, force=True))) == baseline
+    assert len(runner.calls) == 3
+    executor.events.clear()
+    assert len(_job_ids(spark, lambda: executor.apply(migs, force=True))) == baseline
+    assert [e.status for e in executor.events] == ["skipped"] * 3
+    assert len(_job_ids(spark, lambda: executor.rollback(migs, steps=2))) == baseline
+    assert executor.ledger.applied_versions() == ["001"]

@@ -5,7 +5,8 @@
   against the former SQL formulation (same left-assoc distance chains,
   same (dist, j) tie-break).
 * ``mmr_rerank`` gained an explicit driver-collect bound (verdict item
-  4): a corpus-sized queries side must fail fast, not OOM the driver.
+  4): a corpus-sized queries side must fail fast, not OOM the driver;
+  ``pq_assign`` bounds its codebook collect the same way.
 * ``spread_input`` gates on exact backing-file bytes (ADVICE r10), not
   on ``df.rdd`` physical planning: small file-backed inputs spread,
   large or unknown-size inputs pass through unchanged.
@@ -89,6 +90,29 @@ class TestPqAssignArrowParity:
             "vec_id": "bigint", "s": "int", "j": "bigint", "dist": "double"
         }
 
+    def test_int_ids_keep_their_type(self, spark):
+        emb = read_table(spark, SF_DIR, "embeddings")
+        cb = emb.filter(F.col("vec_id") < 16)
+        as_int = F.col("vec_id").cast("int").alias("vec_id")
+        out = SIM.pq_assign(
+            emb.select(as_int, "embedding"), cb.select(as_int, "embedding")
+        )
+        fields = {f.name: f.dataType.simpleString() for f in out.schema.fields}
+        assert fields == {
+            "vec_id": "int", "s": "int", "j": "int", "dist": "double"
+        }
+        want = {
+            (r.vec_id, r.s): (r.j, r.dist)
+            for r in SIM.pq_assign(emb, cb).collect()
+        }
+        assert {(r.vec_id, r.s): (r.j, r.dist) for r in out.collect()} == want
+
+    def test_oversized_codebook_refused(self, spark, monkeypatch):
+        emb = read_table(spark, SF_DIR, "embeddings")
+        monkeypatch.setattr(SIM, "MAX_PQ_CODEWORDS", 8)
+        with pytest.raises(ValueError, match="exceeds 8 codewords"):
+            SIM.pq_assign(emb, emb.filter(F.col("vec_id") < 16))
+
 
 class TestMmrCollectGuard:
     def test_oversized_pool_fails_fast(self, spark, monkeypatch):
@@ -98,6 +122,29 @@ class TestMmrCollectGuard:
             SIM.mmr_rerank(
                 emb, emb.filter(F.col("vec_id") < 5), k=2, pool=4
             )
+
+    def test_bound_checked_before_the_pool_is_collected(
+        self, spark, monkeypatch
+    ):
+        """2 queries × pool 6 = 12 candidate rows against a bound of 10
+        // 6 = 1 row: no collect may bring more than 2 rows to the
+        driver before the refusal."""
+        emb = read_table(spark, SF_DIR, "embeddings")
+        monkeypatch.setattr(SIM, "MAX_COLLECTED_QUERIES", 10)
+        sizes: list[int] = []
+        collect = type(emb).collect
+
+        def counted(self):
+            rows = collect(self)
+            sizes.append(len(rows))
+            return rows
+
+        monkeypatch.setattr(type(emb), "collect", counted)
+        with pytest.raises(ValueError, match="bounded re-rank batch"):
+            SIM.mmr_rerank(
+                emb, emb.filter(F.col("vec_id") < 2), k=2, pool=6
+            )
+        assert sizes and max(sizes) <= 2
 
 
 class TestSpreadInputGate:
